@@ -44,6 +44,11 @@ Plan shape (the 100TB-relevant properties):
    O(size) pairs instead of O(size^2), fully parallel across salt groups.
    All of this reuses the same band exchange (window partition keys
    refine the exchange's hash keys — no extra shuffle).
+4. One engine for batch and fold: candidate_pairs_wide is the only
+   band-join implementation. The incremental fold
+   (pipeline/incremental.py) passes old and new signatures together with
+   an ``is_new`` flag column, and the same plan is restricted to pairs
+   with at least one new side — the old-old quadrant is never joined.
 
 Exactness of the filter-based dedup: for a joined pair let
 ``match`` = bitmask of bands where the signatures agree, and ``banned`` =
@@ -161,8 +166,8 @@ def sig_chunks_raw():
 def banded_with_skew_gate(
     sigs_c: DataFrame, band_vals: Column, max_block: int
 ) -> tuple[DataFrame, DataFrame, bool, DataFrame]:
-    """The adaptive skew gate shared by the batch and incremental blocking
-    paths: compute per-block sizes, probe ONCE at plan-build time for
+    """The adaptive skew gate of candidate_pairs_wide, batch and fold
+    alike: compute per-block sizes, probe ONCE at plan-build time for
     blocks above ``max_block``, and attach the per-conv banned-band
     bitmask only when some block is oversize (otherwise every mask is a
     zero literal and the whole skew subplan is left out of the plan —
@@ -253,6 +258,26 @@ def candidate_pairs_wide(
     sizes travel through a tiny aggregated side-channel (sizes/oversize/
     banned are all small by construction and AQE broadcasts them).
 
+    New-vs-all mode (module docstring, point 4): when ``signatures``
+    carries a boolean ``is_new`` column, only pairs with at least one new
+    side are emitted:
+
+    1. the join's A side is filtered to new rows, and each pair is
+       emitted once via ``a.id != b.id AND (a.id < b.id OR NOT
+       b.is_new)`` (new-new pairs once in id order, new-old pairs once
+       with the new side on A), then swapped back to canonical order;
+    2. oversize blocks chain old and new members TOGETHER in signature
+       order, but chain links with no new side are dropped. Old members
+       are already connected by the prior run's clusters; new members
+       connect to them through signature-adjacent old members
+       (hamming-0 links in identical-sig mega blocks), which survive the
+       scoring gate.
+
+    Block sizes and banned masks are computed over ALL rows, new and old
+    — the sizes the equivalent full batch run sees, which is what makes
+    the fold reproduce the batch clusters. Without ``is_new`` the plan
+    carries no side swaps and no ``is_new`` filters.
+
     Returns (pairs_wide, block_stats); pairs_wide has conv_id_a/b,
     canon_a/b, c{i}_a/b signature chunk longs. block_stats(band_id,
     band_val, block_size, skipped) — `skipped` marks oversize blocks
@@ -261,8 +286,10 @@ def candidate_pairs_wide(
     """
     from .scoring import N_CHUNKS
 
+    new_vs_all = "is_new" in signatures.columns
+    flag = ["is_new"] if new_vs_all else []
     chunk_cols = [c.alias(f"c{i}") for i, c in enumerate(sig_chunks_raw())]
-    sigs_c = signatures.select("conv_id", "canon", *chunk_cols)
+    sigs_c = signatures.select("conv_id", "canon", *flag, *chunk_cols)
     band_vals = F.array(*[_band_val_int(b, n_bands) for b in range(n_bands)])
 
     sigs_b, oversize, has_oversize, block_stats = banded_with_skew_gate(
@@ -270,7 +297,7 @@ def candidate_pairs_wide(
     )
 
     bands = sigs_b.select(
-        "conv_id", "canon", "banned",
+        "conv_id", "canon", "banned", *flag,
         *[f"c{i}" for i in range(N_CHUNKS)],
         F.posexplode(band_vals).alias("band_id", "band_val"),
     )
@@ -288,20 +315,40 @@ def candidate_pairs_wide(
     kept = bands.where(F.expr("(shiftright(banned, band_id) & 1) = 0"))
     a = kept.alias("a")
     b = kept.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_val") == F.col("b.band_val"))
-        & (F.col("a.conv_id") < F.col("b.conv_id")),
-    ).select(
+    on = (F.col("a.band_id") == F.col("b.band_id")) & (
+        F.col("a.band_val") == F.col("b.band_val")
+    )
+    if new_vs_all:
+        a = kept.where(F.col("is_new")).alias("a")
+        on = (
+            on
+            & (F.col("a.conv_id") != F.col("b.conv_id"))
+            & ((F.col("a.conv_id") < F.col("b.conv_id")) | ~F.col("b.is_new"))
+        )
+        swap = F.col("b.conv_id") < F.col("a.conv_id")
+    else:
+        on = on & (F.col("a.conv_id") < F.col("b.conv_id"))
+        swap = None
+
+    def side(col: str, a_side: bool) -> Column:
+        """Column of the canonical A (or B) side: a.* / b.* as joined,
+        or the swap CASE in new-vs-all mode."""
+        if swap is None:
+            return F.col(f"a.{col}" if a_side else f"b.{col}")
+        take_a = ~swap if a_side else swap
+        return F.when(take_a, F.col(f"a.{col}")).otherwise(F.col(f"b.{col}"))
+
+    joined = a.join(b, on).select(
         F.col("a.band_id").alias("band_id"),
-        F.col("a.conv_id").alias("conv_id_a"),
-        F.col("b.conv_id").alias("conv_id_b"),
-        F.col("a.canon").alias("canon_a"),
-        F.col("b.canon").alias("canon_b"),
+        side("conv_id", True).alias("conv_id_a"),
+        side("conv_id", False).alias("conv_id_b"),
+        side("canon", True).alias("canon_a"),
+        side("canon", False).alias("canon_b"),
+        # on a matching band both sides sit in the same block, so either
+        # side's banned bit is valid at every band the pair agrees on
         F.col("a.banned").alias("banned_a"),
-        *[F.col(f"a.c{i}").alias(f"c{i}_a") for i in range(N_CHUNKS)],
-        *[F.col(f"b.c{i}").alias(f"c{i}_b") for i in range(N_CHUNKS)],
+        *[side(f"c{i}", True).alias(f"c{i}_a") for i in range(N_CHUNKS)],
+        *[side(f"c{i}", False).alias(f"c{i}_b") for i in range(N_CHUNKS)],
     )
     eff = _match_mask(n_bands).bitwiseAND(F.bitwise_not(F.col("banned_a")))
     normal = (
@@ -337,7 +384,7 @@ def candidate_pairs_wide(
     )
     chunk_names = [f"c{i}" for i in range(N_CHUNKS)]
     order_cols = [*chunk_names, "conv_id"]
-    payload = F.struct("conv_id", "canon", "banned", *chunk_names)
+    payload = F.struct("conv_id", "canon", "banned", *flag, *chunk_names)
 
     wg = Window.partitionBy("band_id", "band_val", "salt").orderBy(*order_cols)
     adjacent = over.withColumn("nb", F.lead(payload).over(wg))
@@ -376,10 +423,14 @@ def candidate_pairs_wide(
     # swap-CASE chunk expression in a First() aggregate, which blows up
     # Catalyst's optimizer fixed-point (measured: minutes of driver time
     # on a 40-row block).
+    chain_src = adjacent.unionByName(rep_pairs, allowMissingColumns=False).where(
+        F.col("nb").isNotNull()
+    )
+    if new_vs_all:
+        # old-old links are the prior run's connectivity, never re-emitted
+        chain_src = chain_src.where(F.col("is_new") | F.col("nb.is_new"))
     chain_src = (
-        adjacent.unionByName(rep_pairs, allowMissingColumns=False)
-        .where(F.col("nb").isNotNull())
-        .withColumn("_nb_id", F.col("nb.conv_id"))
+        chain_src.withColumn("_nb_id", F.col("nb.conv_id"))
         .dropDuplicates(["band_id", "band_val", "conv_id", "_nb_id"])
         .drop("_nb_id")
     )

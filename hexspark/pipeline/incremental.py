@@ -10,6 +10,12 @@ the total corpus size apart from one linear band-projection scan of the old
 signatures (which at scale is served by the materialized signatures table —
 no re-fingerprinting of old conversations ever happens).
 
+Blocking is the batch engine itself: blocking.candidate_pairs_wide over
+the old and new signatures together, flagged with an ``is_new`` column,
+which restricts the band join (and the oversize-block chains) to pairs
+with at least one new side — one implementation, so every blocking change
+reaches the fold and the batch run alike.
+
 Semantics contract (tested in tests/test_incremental.py): running the batch
 pipeline on corpus A, then incrementally adding batch B, yields the SAME
 clusters as running the batch pipeline on A ∪ B — when no LSH block is
@@ -28,202 +34,10 @@ reusing A2/A3 scoring semantics unchanged via scoring.score_wide.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import assemble, clustering, scoring, simhash
-from .blocking import (
-    _band_val_int,
-    _match_mask,
-    banded_with_skew_gate,
-    sig_chunks_raw,
-)
-
-
-def incremental_candidate_pairs_wide(
-    signatures: DataFrame,
-    n_bands: int = 16,
-    max_block: int = 2000,
-) -> tuple[DataFrame, DataFrame]:
-    """LSH candidate pairs restricted to pairs touching >= 1 NEW signature.
-
-    ``signatures`` must carry an ``is_new`` boolean column on top of the
-    usual signature schema. Output schema matches
-    blocking.candidate_pairs_wide (conv_id_a/b, canon_a/b, c{i}_a/b chunk
-    longs), so scoring.score_wide applies unchanged.
-
-    Plan shape mirrors the batch wide path (one band exchange; pair dedup is
-    a codegen first-matching-band filter; zero pair-stream shuffles), with
-    two incremental twists:
-
-    1. The self-join keeps a row only when the A side is new; each pair is
-       emitted once via ``a.id < b.id OR NOT b.is_new`` (new-new pairs once
-       in canonical order, new-old pairs once with the new side on A; the
-       old-old quadrant — the bulk of the corpus — is never generated).
-    2. Oversize blocks (banned bands) chain old and new members TOGETHER in
-       signature order — one rep per (salt group, distinct signature), rep
-       chain sorted by signature, same post-gate-robust construction as the
-       batch path (see the connectivity comment in blocking.py) — but only
-       chain pairs with >= 1 new side are emitted. Old members of an
-       oversize block are already mutually connected by the prior run's
-       clusters, so dropping old-old chain links loses nothing; new members
-       connect to the existing cluster through signature-adjacent old
-       members (hamming-0 links for identical-sig mega blocks), which
-       survive the scoring gate where an arbitrary new-rep-to-min-old
-       bridge (the previous design) could fail it.
-
-    Block sizes and banned masks are computed over the COMBINED corpus —
-    the same sizes the equivalent full batch run would see, which is what
-    makes the equivalence contract in the module docstring hold.
-
-    Returns (pairs_wide, block_stats) like the batch path.
-    """
-    from .scoring import N_CHUNKS
-
-    chunk_cols = [c.alias(f"c{i}") for i, c in enumerate(sig_chunks_raw())]
-    sigs_c = signatures.select("conv_id", "canon", "is_new", *chunk_cols)
-    band_vals = F.array(*[_band_val_int(b, n_bands) for b in range(n_bands)])
-
-    # adaptive skew gate shared with the batch path (see
-    # blocking.banded_with_skew_gate): block sizes over the COMBINED corpus
-    sigs_b, oversize, has_oversize, block_stats = banded_with_skew_gate(
-        sigs_c, band_vals, max_block
-    )
-
-    bands = sigs_b.select(
-        "conv_id", "canon", "banned", "is_new",
-        *[f"c{i}" for i in range(N_CHUNKS)],
-        F.posexplode(band_vals).alias("band_id", "band_val"),
-    )
-    # ANSI-safe bits-[0,band_id) mask; see blocking.py (n_bands=64 case)
-    low_bits = F.expr("~ shiftleft(-1L, band_id)")
-
-    # ---- normal branch: non-oversize blocks, A side must be new ---------
-    kept = bands.where(F.expr("(shiftright(banned, band_id) & 1) = 0"))
-    a = kept.where(F.col("is_new")).alias("a")
-    b = kept.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_val") == F.col("b.band_val"))
-        & (F.col("a.conv_id") != F.col("b.conv_id"))
-        & ((F.col("a.conv_id") < F.col("b.conv_id")) | ~F.col("b.is_new")),
-    )
-    swap = F.col("b.conv_id") < F.col("a.conv_id")
-
-    def pick(col: str, a_side: bool):
-        take_a = ~swap if a_side else swap
-        return F.when(take_a, F.col(f"a.{col}")).otherwise(F.col(f"b.{col}"))
-
-    sel = [
-        F.col("a.band_id").alias("band_id"),
-        pick("conv_id", True).alias("conv_id_a"),
-        pick("conv_id", False).alias("conv_id_b"),
-        pick("canon", True).alias("canon_a"),
-        pick("canon", False).alias("canon_b"),
-        # on a matching band both sides sit in the same block, so either
-        # side's banned bit is valid at every band the pair agrees on —
-        # same argument as the batch path (blocking module docstring)
-        F.col("a.banned").alias("banned_a"),
-    ]
-    for i in range(N_CHUNKS):
-        sel.append(pick(f"c{i}", True).alias(f"c{i}_a"))
-        sel.append(pick(f"c{i}", False).alias(f"c{i}_b"))
-    joined = joined.select(*sel)
-
-    eff = _match_mask(n_bands).bitwiseAND(F.bitwise_not(F.col("banned_a")))
-    normal = (
-        joined.withColumn("eff", eff)
-        .where(F.col("eff").bitwiseAND(low_bits) == 0)
-        .drop("eff", "band_id", "banned_a")
-    )
-
-    out_cols = [
-        "conv_id_a", "conv_id_b", "canon_a", "canon_b",
-        *[f"c{i}_a" for i in range(N_CHUNKS)],
-        *[f"c{i}_b" for i in range(N_CHUNKS)],
-    ]
-    if not has_oversize:
-        return normal.select(*out_cols), block_stats
-
-    # ---- chain branch: oversize blocks — combined old+new sig-order chain
-    over = (
-        bands.where(F.expr("(shiftright(banned, band_id) & 1) = 1"))
-        .join(
-            F.broadcast(oversize.select("band_id", "band_val", "block_size")),
-            ["band_id", "band_val"],
-        )
-        .withColumn(
-            "salt",
-            F.pmod(
-                F.xxhash64("conv_id"),
-                F.ceil(F.col("block_size") / F.lit(max_block)).cast("long"),
-            ),
-        )
-    )
-    chunk_names = [f"c{i}" for i in range(N_CHUNKS)]
-    order_cols = [*chunk_names, "conv_id"]
-    payload = F.struct("conv_id", "canon", "banned", "is_new", *chunk_names)
-
-    wg = Window.partitionBy("band_id", "band_val", "salt").orderBy(*order_cols)
-    adjacent = over.withColumn("nb", F.lead(payload).over(wg))
-    wgs = Window.partitionBy("band_id", "band_val", "salt", *chunk_names).orderBy(
-        "conv_id"
-    )
-    reps = (
-        adjacent.withColumn("srn", F.row_number().over(wgs))
-        .where(F.col("srn") == 1)
-        .drop("nb", "srn")
-    )
-    wr = Window.partitionBy("band_id", "band_val").orderBy(*order_cols)
-    rep_pairs = reps.withColumn("nb", F.lead(payload).over(wr))
-
-    chain_src = (
-        adjacent.unionByName(rep_pairs)
-        .where(F.col("nb").isNotNull())
-        # incremental constraint: never emit old-old (their connectivity is
-        # the prior run's job); everything else mirrors the batch chain
-        .where(F.col("is_new") | F.col("nb.is_new"))
-        # singleton sig-run rep links can coincide with in-group adjacent
-        # links; dedup on PLAIN columns here — see the blocking.py comment
-        # on why deduping the projected pairs instead melts the optimizer
-        .withColumn("_nb_id", F.col("nb.conv_id"))
-        .dropDuplicates(["band_id", "band_val", "conv_id", "_nb_id"])
-        .drop("_nb_id")
-    )
-    cswap = F.col("nb.conv_id") < F.col("conv_id")
-
-    def cpick(own: str, a_side: bool):
-        take_own = ~cswap if a_side else cswap
-        return F.when(take_own, F.col(own)).otherwise(F.col(f"nb.{own}"))
-
-    csel = [
-        "band_id",
-        cpick("conv_id", True).alias("conv_id_a"),
-        cpick("conv_id", False).alias("conv_id_b"),
-        cpick("canon", True).alias("canon_a"),
-        cpick("canon", False).alias("canon_b"),
-        cpick("banned", True).alias("banned_a"),
-    ]
-    for i in range(N_CHUNKS):
-        csel.append(cpick(f"c{i}", True).alias(f"c{i}_a"))
-        csel.append(cpick(f"c{i}", False).alias(f"c{i}_b"))
-    chain_rows = chain_src.select(*csel)
-
-    cmatch = _match_mask(n_bands)
-    chain = (
-        chain_rows.withColumn("match", cmatch)
-        .withColumn("eff", F.col("match").bitwiseAND(F.bitwise_not(F.col("banned_a"))))
-        .withColumn("bmatch", F.col("match").bitwiseAND(F.col("banned_a")))
-        .where(
-            (F.col("eff") == 0)
-            & (F.col("bmatch").bitwiseAND(low_bits) == 0)
-        )
-        .drop("match", "eff", "bmatch", "band_id", "banned_a")
-    )
-
-    pairs = normal.select(*out_cols).unionByName(chain.select(*out_cols))
-    return pairs, block_stats
+from . import assemble, blocking, clustering, scoring, simhash
 
 
 def merge_clusters(
@@ -393,7 +207,9 @@ def incremental_update(
     all_sigs = prior_signatures.withColumn("is_new", F.lit(False)).unionByName(
         new_sigs.withColumn("is_new", F.lit(True))
     )
-    pairs, block_stats = incremental_candidate_pairs_wide(
+    # the batch blocking engine in new-vs-all mode (the is_new column):
+    # pairs with >= 1 new side only, block sizes over the combined corpus
+    pairs, block_stats = blocking.candidate_pairs_wide(
         all_sigs, n_bands=n_bands, max_block=max_block
     )
     if score_fn is None:

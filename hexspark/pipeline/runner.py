@@ -34,10 +34,6 @@ class PipelineConfig:
     min_score: float = 0.0
     cc_max_iter: int = 20
     pair_partitions: int | None = None  # explicit repartition before scoring
-    # wide pairs carry both sides' signature chunks + canon out of the band
-    # self-join, so scoring is a pure narrow map (no re-attach joins) — the
-    # scale-path plan; False falls back to thin pairs + two attach joins
-    wide_pairs: bool = True
     # pairwise scorer: "blend" = the fixed hamming+Jaro-Winkler alpha blend
     # gated on max_dist (the reference's A2/A3 semantics); "fs" = the
     # Fellegi-Sunter classical-linkage path (pipeline/fs.py) — per-chunk
@@ -75,7 +71,7 @@ class PipelineConfig:
     # progressive / pay-as-you-go resolution; threshold ties all kept).
     # Cuts the quadratic scoring phase's input at
     # near-zero recall cost; the pruned stream lands as its own resumable
-    # stage table (pruned_pairs). Requires wide_pairs. Incremental folds
+    # stage table (pruned_pairs). Not with extra_passes. Incremental folds
     # score their new-vs-all pairs UNPRUNED by design: a batch's
     # node-local means over a partial graph would drift the threshold,
     # and skipping the prune on (small) increments is recall-monotone —
@@ -144,10 +140,13 @@ class PipelineConfig:
     # decides every pair. Allowed names: "suffix" (suffix-array keys,
     # prefix-corruption-robust), "phonetic" (Soundex), "snm" (fixed
     # window extra_snm_window over the global rank), "adaptive_snm"
-    # (boundary-segmented windows). Thin-pairs only — the extra passes
-    # carry no signature chunks, so wide_pairs/fs/meta_prune (which
-    # need them) are mutually exclusive; batch-only (the incremental
-    # path implements banded blocking only).
+    # (boundary-segmented windows). Without extra passes the candidate
+    # stage holds WIDE pairs (both sides' signature chunks + canon carried
+    # out of the band join, so scoring is a pure narrow map); with them it
+    # holds thin pairs scored by score_and_match's two attach joins — the
+    # extra passes carry no signature chunks, so fs/fs_levels/meta_prune
+    # (which need them) do not compose; batch-only (the incremental path
+    # implements banded blocking only).
     extra_passes: tuple = ()
     extra_snm_window: int = 10
     # exact containment pre-dedup (pipeline/align.py): before assembly,
@@ -226,11 +225,6 @@ class Runner:
             raise ValueError(
                 f"meta_cep_budget must be >= 1 (got {self.cfg.meta_cep_budget})"
             )
-        if self.cfg.meta_prune != "off" and not self.cfg.wide_pairs:
-            raise ValueError(
-                "meta_prune requires wide_pairs=True (the CBS weight is "
-                "computed from the carried signature chunks)"
-            )
         if self.cfg.clustering_mode not in ("cc", "pivot", "star", "hac", "lpa"):
             raise ValueError(
                 "clustering_mode must be 'cc', 'pivot', 'star', 'hac', or "
@@ -250,11 +244,15 @@ class Runner:
             raise ValueError(
                 f"unknown extra_passes {unknown!r}; allowed: {allowed_passes}"
             )
-        if self.cfg.extra_passes and self.cfg.wide_pairs:
+        if self.cfg.extra_passes and (
+            self.cfg.meta_prune != "off"
+            or self.cfg.scoring_mode in ("fs", "fs_levels")
+        ):
             raise ValueError(
-                "extra_passes requires wide_pairs=False: the extra passes "
-                "carry no signature chunks, so the wide scoring path (and "
-                "fs/meta_prune modes built on it) cannot consume the union"
+                "extra_passes does not compose with meta_prune or "
+                "scoring_mode='fs'/'fs_levels': the extra passes carry no "
+                "signature chunks, so their union is scored as thin pairs "
+                "and the chunk-based CBS weight / FS fields are unavailable"
             )
         if self.cfg.drop_contained and self.cfg.containment_depth_cap < 1:
             raise ValueError(
@@ -393,10 +391,9 @@ class Runner:
         )
 
         def build_pairs() -> DataFrame:
-            maker = (
-                blocking.candidate_pairs_wide if cfg.wide_pairs else blocking.candidate_pairs
+            pairs, stats = blocking.candidate_pairs_wide(
+                sigs, n_bands=cfg.n_bands, max_block=cfg.max_block
             )
-            pairs, stats = maker(sigs, n_bands=cfg.n_bands, max_block=cfg.max_block)
             self.io.write(stats.where(F.col("skipped")), "skipped_blocks")
             if not cfg.extra_passes:
                 return pairs
@@ -465,8 +462,6 @@ class Runner:
             if cfg.scoring_mode == "fs_levels":
                 # same fit-on-this-run's-pairs + manifest-recorded-model
                 # contract as fs mode, with the categorical (per-level) EM
-                if not cfg.wide_pairs:
-                    raise ValueError("scoring_mode='fs_levels' requires wide_pairs=True")
                 from . import fs
 
                 params, prev = fs.fit_wide_levels(
@@ -494,8 +489,6 @@ class Runner:
                 # fit on THIS run's pairs (one pattern-count aggregation
                 # over the materialized stage table + driver EM), record
                 # the model in the manifest so incremental folds reuse it
-                if not cfg.wide_pairs:
-                    raise ValueError("scoring_mode='fs' requires wide_pairs=True")
                 from . import fs
 
                 params, prev = fs.fit_wide_pairs(
@@ -520,12 +513,12 @@ class Runner:
                     canon_prefix_len=cfg.fs_canon_prefix_len,
                     canon_tf=canon_tf,
                 )
-            if cfg.wide_pairs:
-                return scoring.score_wide(
-                    p, max_dist=cfg.max_dist, alpha=cfg.alpha, min_score=cfg.min_score
+            if cfg.extra_passes:
+                return scoring.score_and_match(
+                    p, sigs, max_dist=cfg.max_dist, alpha=cfg.alpha, min_score=cfg.min_score
                 )
-            return scoring.score_and_match(
-                p, sigs, max_dist=cfg.max_dist, alpha=cfg.alpha, min_score=cfg.min_score
+            return scoring.score_wide(
+                p, max_dist=cfg.max_dist, alpha=cfg.alpha, min_score=cfg.min_score
             )
 
         edges = self._run_stage(manifest, result, "edges", build_edges)

@@ -10,9 +10,10 @@ Plan shape: the preferred path is score_wide over
 blocking.candidate_pairs_wide — pair rows that already carry both sides'
 signature chunks and canon keys, making scoring a pure narrow map stage
 (codegen hamming gate, then the Arrow Jaro-Winkler kernel on survivors;
-zero joins, zero shuffles). score_and_match/score_pairs remain for thin
-pairs(conv_id_a, conv_id_b): they re-attach signatures with two equi-joins
-(broadcast at sandbox scale via AQE, shuffle joins at 10^12-turn scale).
+zero joins, zero shuffles). score_and_match remains for thin
+pairs(conv_id_a, conv_id_b): it re-attaches signatures with two equi-joins
+(broadcast at sandbox scale via AQE, shuffle joins at 10^12-turn scale)
+and then runs score_wide.
 
     score = alpha * (1 - hamming_dist/256) + (1 - alpha) * jw(canon_a, canon_b)
 """
@@ -108,21 +109,6 @@ def _jw_batches(alpha: float):
             )
 
     return run
-
-
-def score_pairs(pairs: DataFrame, signatures: DataFrame, alpha: float = DEFAULT_ALPHA) -> DataFrame:
-    """pairs(conv_id_a, conv_id_b) × signatures → scored
-    edges(conv_id_a, conv_id_b, hamming_dist, jw, score) for ALL pairs.
-
-    Hamming runs JVM-side (hamming_jvm); Jaro-Winkler + hybrid score run in
-    one mapInArrow stage. Prefer score_and_match when a distance gate
-    applies — it filters in codegen BEFORE paying the Python boundary."""
-    joined = _attach_signatures(pairs, signatures).withColumn(
-        "hamming_dist", hamming_jvm()
-    )
-    return joined.select(
-        "conv_id_a", "conv_id_b", "hamming_dist", "canon_a", "canon_b"
-    ).mapInArrow(_jw_batches(alpha), _JW_SCHEMA)
 
 
 def score_and_match(

@@ -32,6 +32,14 @@ def apply_malloc_tuning() -> None:
         os.environ.setdefault(k, v)
 
 
+def _default_driver_mem() -> str:
+    """Driver heap default: 40% of physical memory, clamped to [1g, 16g] —
+    leaves room for the JVM's off-heap use, the Python workers and the
+    driver process on a small host."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(16384, max(1024, phys_mb * 2 // 5))}m"
+
+
 def get_spark(
     app_name: str = "hexspark",
     master: str | None = None,
@@ -39,7 +47,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     apply_malloc_tuning()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local mode: match cores so every stage keeps all threads busy
@@ -68,7 +76,10 @@ def get_spark(
         .config("spark.shuffle.sort.bypassMergeThreshold", "1")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("HEXSPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("HEXSPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -209,7 +209,6 @@ def main() -> None:
         containment_depth_cap=args.containment_depth_cap,
         stability_samples=args.stability_samples,
         stability_keep_frac=args.stability_keep_frac,
-        wide_pairs=not args.extra_passes,
         extra_passes=tuple(
             p for p in (args.extra_passes or "").split(",") if p
         ),

@@ -70,25 +70,57 @@ def test_incremental_matches_full_batch(spark, split_data):
     assert clusters_full.exceptAll(res["clusters"]).count() == 0
 
 
-def test_no_old_old_pairs(spark, split_data):
-    tr, tr_old, tr_new, old_ids = split_data
+def _flagged_sigs(tr_old, tr_new):
     sigs_old = simhash.signatures(assemble.assemble_conversations(tr_old))
     sigs_new = simhash.signatures(assemble.assemble_conversations(tr_new))
-    all_sigs = sigs_old.withColumn("is_new", F.lit(False)).unionByName(
+    return sigs_old.withColumn("is_new", F.lit(False)).unionByName(
         sigs_new.withColumn("is_new", F.lit(True))
     )
-    pairs, _ = incremental.incremental_candidate_pairs_wide(all_sigs)
-    both_old = (
-        pairs.join(old_ids.withColumnRenamed("conv_id", "conv_id_a"), "conv_id_a")
-        .join(old_ids.withColumnRenamed("conv_id", "conv_id_b"), "conv_id_b")
+
+
+def _id_pairs(pairs):
+    return sorted((r.conv_id_a, r.conv_id_b)
+                  for r in pairs.select("conv_id_a", "conv_id_b").collect())
+
+
+# the fixture's largest LSH block has 7 members: 4 puts ~100 blocks over
+# the cap, so the salted chain branch runs too
+@pytest.mark.parametrize("max_block", [2000, 4])
+def test_no_old_old_pairs(spark, split_data, max_block):
+    tr, tr_old, tr_new, old_ids = split_data
+    pairs, stats = blocking.candidate_pairs_wide(
+        _flagged_sigs(tr_old, tr_new), max_block=max_block
     )
-    assert both_old.count() == 0
+    n_oversize = stats.where(F.col("skipped")).count()
+    assert (n_oversize > 0) == (max_block == 4), n_oversize
+    old = {r.conv_id for r in old_ids.collect()}
+    got = _id_pairs(pairs)
+    assert got
+    assert not [p for p in got if p[0] in old and p[1] in old]
     # and each emitted pair is emitted exactly once, canonical order
-    assert pairs.where(F.col("conv_id_a") >= F.col("conv_id_b")).count() == 0
-    assert (
-        pairs.groupBy("conv_id_a", "conv_id_b").count().where("count > 1").count()
-        == 0
+    assert all(a < b for a, b in got)
+    assert len(got) == len(set(got))
+
+
+@pytest.mark.parametrize("max_block", [2000, 4])
+@pytest.mark.parametrize("flag", ["literal", "expression"])
+def test_all_new_flag_reproduces_batch_pairs(spark, split_data, max_block, flag):
+    """With every row new, new-vs-all mode must emit exactly the batch
+    pair set — a constant-folded flag and one the optimizer cannot fold
+    alike, with and without the chain branch (max_block=4)."""
+    tr = split_data[0]
+    sigs = simhash.signatures(assemble.assemble_conversations(tr)).persist()
+    is_new = (
+        F.lit(True) if flag == "literal" else F.xxhash64("conv_id").isNotNull()
     )
+    batch, _ = blocking.candidate_pairs_wide(sigs, max_block=max_block)
+    fold, _ = blocking.candidate_pairs_wide(
+        sigs.withColumn("is_new", is_new), max_block=max_block
+    )
+    want = _id_pairs(batch)
+    assert want
+    assert _id_pairs(fold) == want
+    sigs.unpersist()
 
 
 def test_incremental_pairs_cover_new_vs_all_candidates(spark, split_data):
@@ -98,12 +130,7 @@ def test_incremental_pairs_cover_new_vs_all_candidates(spark, split_data):
     sigs_full = simhash.signatures(assemble.assemble_conversations(tr))
     full_pairs, _ = blocking.candidate_pairs(sigs_full)
 
-    sigs_old = simhash.signatures(assemble.assemble_conversations(tr_old))
-    sigs_new = simhash.signatures(assemble.assemble_conversations(tr_new))
-    all_sigs = sigs_old.withColumn("is_new", F.lit(False)).unionByName(
-        sigs_new.withColumn("is_new", F.lit(True))
-    )
-    inc_pairs, _ = incremental.incremental_candidate_pairs_wide(all_sigs)
+    inc_pairs, _ = blocking.candidate_pairs_wide(_flagged_sigs(tr_old, tr_new))
 
     full_touching_new = (
         full_pairs.join(old_ids.withColumnRenamed("conv_id", "conv_id_a"),

@@ -284,11 +284,11 @@ def test_runner_meta_prune_validation(spark, tmp_path):
 
     with pytest.raises(ValueError, match="meta_prune"):
         Runner(spark, str(tmp_path / "x"), PipelineConfig(meta_prune="bogus"))
-    with pytest.raises(ValueError, match="wide_pairs"):
+    with pytest.raises(ValueError, match="extra_passes does not compose"):
         Runner(
             spark,
             str(tmp_path / "y"),
-            PipelineConfig(meta_prune="wnp", wide_pairs=False),
+            PipelineConfig(meta_prune="wnp", extra_passes=("suffix",)),
         )
     with pytest.raises(ValueError, match="meta_cnp_k"):
         Runner(

@@ -96,16 +96,17 @@ def test_hamming_gate_in_codegen_before_python(spark):
 
 
 def test_incremental_pairs_same_plan_discipline(spark):
-    """The incremental blocking path must keep the batch path's two scale
-    properties: pair dedup is a codegen filter (no pair-keyed exchange, no
-    SortAggregate), and scoring adds zero exchanges on top of it."""
-    from hexspark.pipeline import incremental, scoring
+    """Blocking in new-vs-all mode (the incremental fold's ``is_new``
+    flag) must keep the batch plan's two scale properties: pair dedup is a
+    codegen filter (no pair-keyed exchange, no SortAggregate), and scoring
+    adds zero exchanges on top of it."""
+    from hexspark.pipeline import blocking, scoring
 
     sigs = _sigs(spark)
     flagged = sigs.withColumn(
         "is_new", F.pmod(F.xxhash64("conv_id"), F.lit(3)) == 0
     )
-    pairs, _ = incremental.incremental_candidate_pairs_wide(flagged)
+    pairs, _ = blocking.candidate_pairs_wide(flagged)
     plan = _plan(pairs)
     assert "SortAggregate" not in plan, plan[:2000]
     assert "hashpartitioning(conv_id_a" not in plan, (
